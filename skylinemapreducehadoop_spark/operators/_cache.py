@@ -71,6 +71,18 @@ def scan_partitions(df: DataFrame) -> int:
     return min(len(files), planned)
 
 
+def fan_out(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` to the default parallelism when its planned
+    scan is narrower than that (one small or unsplittable file), so the
+    CPU-bound work that follows runs on every core. Sources already
+    scanning wide — and every input at cluster scale, where splits
+    outnumber cores — pass through without an exchange."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if 0 < scan_partitions(df) < par:
+        return df.repartition(par)
+    return df
+
+
 def persist_tracked(df: DataFrame) -> DataFrame:
     df = df.persist()
     with _PERSISTED_LOCK:

@@ -1051,14 +1051,10 @@ def contamination_check_fuzzy(
     # keeps its size-gated fan-out (_fan_out_narrow_scan) — there the
     # extra exchange measurably hurts small corpora; here the checkpoint
     # pays the parse exactly once either way.
-    from skylinemapreducehadoop_spark.operators._cache import scan_partitions
+    from skylinemapreducehadoop_spark.operators._cache import fan_out
 
-    sc = df.sparkSession.sparkContext
-    fanned = df
-    if 0 < scan_partitions(df) < sc.defaultParallelism:
-        fanned = df.repartition(sc.defaultParallelism)
     c_sigs = minhash_signatures(
-        fanned, id_col, text_col, k=k, n_perm=n_perm, seed=seed
+        fan_out(df), id_col, text_col, k=k, n_perm=n_perm, seed=seed
     ).localCheckpoint(eager=True)
     b_sigs = minhash_signatures(
         benchmark, id_col, text_col, k=k, n_perm=n_perm, seed=seed

@@ -16,8 +16,8 @@ L-SKY-MR / G-SKY-MR pipeline — Spark-first:
   point* dominates every possible point of the cell (corner test against
   the sample skyline) — provably safe, strictly more pruning.
 - **Q3 cell assignment** (``/root/reference/QTNode.java:170-179``): a
-  vectorized pandas UDF descending the broadcast tree; pruned cells
-  yield NULL and the rows are filtered before the shuffle (P4,
+  vectorized Arrow UDF descending the tree; pruned cells yield NULL and
+  the rows are filtered before the shuffle (P4,
   ``/root/reference/LSkyMapper.java:45-50``).
 - **A5 VPn** (``/root/reference/LSkyReducer.java:26-31``): per-cell
   component-wise max over the cell's local skyline — one JVM-side
@@ -40,6 +40,19 @@ L-SKY-MR / G-SKY-MR pipeline — Spark-first:
   within each target cell, keep a ``+`` row iff no ``*`` row strictly
   dominates it.
 
+Coordinates: the bounds, the sample and the VPn map are computed
+JVM-side with ``_kernel.column_coords``; cells are assigned and
+dominance is tested executor-side on ``_kernel.arrow_coords``. The two
+encoders agree bit for bit (DATE → epoch days, TIMESTAMP → epoch µs,
+everything else → double, times the sign), so a point always routes to
+the cell whose bounds were measured for it, whatever the dim types.
+All pairwise tests (J1, J2, J3) go through the kernel's chunked
+dominance primitives, so no task builds an unbounded
+rows × opponents × d temporary.
+
+The tree parameters (``_MAXP``, ``_SAMPLE_ROWS``, ``_MAX_DEPTH``,
+``_SEED``) are module constants read at call time.
+
 Scale design: the only full-data shuffles are (1) the groupBy(cell) for
 local skylines and (2) the groupBy(target) over the already-reduced
 local-skyline union. The tree, VPn map, filter points, and isNeeded
@@ -53,13 +66,19 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from skylinemapreducehadoop_spark.operators._kernel import skyline_mask
+from skylinemapreducehadoop_spark.operators._cache import fan_out, persist_tracked
+from skylinemapreducehadoop_spark.operators._kernel import (
+    arrow_coords,
+    column_coords,
+    dominance_matrix,
+    dominated_mask,
+    skyline_mask,
+)
 
 # Tree nodes are plain picklable values for broadcast:
 #   internal -> {"mid": [float], "ch": {int: node}}
@@ -187,26 +206,6 @@ def cell_bounds(cell_id: str, root_lo: np.ndarray, root_hi: np.ndarray):
     return lo, hi
 
 
-def _signed_matrix(tbl: pa.Table, dim_signs) -> np.ndarray:
-    """(n, d) min-normalized matrix from Arrow columns. Timestamps
-    become epoch seconds via the exact float ops Spark's
-    cast(timestamp as double) performs (micros / 1e6) so Python-side
-    and JVM-side coordinates agree to the last ulp — the tree/VPn/
-    bounds are built JVM-side and probed here. Arrow (not pandas) so
-    pass-through columns are never dtype-converted."""
-    arr = np.empty((tbl.num_rows, len(dim_signs)), dtype=np.float64)
-    for j, (col, sign) in enumerate(dim_signs):
-        c = tbl.column(col)
-        if pa.types.is_timestamp(c.type):
-            vals = c.cast(pa.timestamp("us")).cast(pa.int64()).to_numpy(
-                zero_copy_only=False
-            ).astype(np.float64) / 1e6
-        else:
-            vals = c.to_numpy(zero_copy_only=False).astype(np.float64)
-        arr[:, j] = sign * vals
-    return arr
-
-
 #: memo of (bounds, pruned tree) per (analyzed input plan, params):
 #: repeated skylines over the same source skip the two profiling jobs
 #: entirely (build-once / probe-many, like the IVF index). Session-
@@ -217,8 +216,18 @@ def _signed_matrix(tbl: pa.Table, dim_signs) -> np.ndarray:
 _TREE_CACHE: dict[tuple, tuple] = {}
 _TREE_CACHE_CAP = 16
 
+# Tree parameters, read at call time (tests monkeypatch them).
+#: split a node holding more than this many sample points (the
+#: reference's maxp=20, QTNode.java:50); None scales it so the tree has
+#: about 4 cells per core at the sample size
+_MAXP: int | None = None
+#: rows in the content-hash sample the tree is built from
+_SAMPLE_ROWS = 20_000
+_MAX_DEPTH = 12
+_SEED = 42
 
-def _profile_input(df: DataFrame, dim_signs, maxp, sample_rows, max_depth, seed):
+
+def _profile_input(df: DataFrame, dim_signs):
     """Driver step: exact bounds (Job-0 analogue, wired programmatically
     — the reference hand-pasted them, Skyline.java:365-366) + sample +
     pruned tree. Memoized per analyzed plan; both jobs are narrow
@@ -227,10 +236,8 @@ def _profile_input(df: DataFrame, dim_signs, maxp, sample_rows, max_depth, seed)
 
     spark = df.sparkSession
     d = len(dim_signs)
-    signed = [
-        (F.col(c).cast("double") * F.lit(s)).alias(f"__s{j}")
-        for j, (c, s) in enumerate(dim_signs)
-    ]
+    maxp, sample_rows, max_depth, seed = _MAXP, _SAMPLE_ROWS, _MAX_DEPTH, _SEED
+    signed = column_coords(df, dim_signs)
     try:
         plan_key = hashlib.md5(
             df._jdf.queryExecution().analyzed().canonicalized().toString().encode()
@@ -285,16 +292,7 @@ def _profile_input(df: DataFrame, dim_signs, maxp, sample_rows, max_depth, seed)
     return out
 
 
-def quadtree_skyline(
-    df: DataFrame,
-    dim_signs: list[tuple[str, float]],
-    *,
-    maxp: int | None = None,
-    sample_rows: int = 20_000,
-    max_depth: int = 12,
-    prefilter: bool = True,
-    seed: int = 42,
-) -> DataFrame:
+def quadtree_skyline(df: DataFrame, dim_signs: list[tuple[str, float]]) -> DataFrame:
     """Skyline of ``df`` (NULL dims already dropped by the caller) via
     dominance-aware quadtree cells. Same result as strategy='twophase';
     different physical plan: data-space pruning before the local pass
@@ -303,7 +301,7 @@ def quadtree_skyline(
     dim_cols = [c for c, _ in dim_signs]
     d = len(dim_signs)
 
-    profiled = _profile_input(df, dim_signs, maxp, sample_rows, max_depth, seed)
+    profiled = _profile_input(df, dim_signs)
     if profiled is None:
         return df.limit(0)
     lo, hi, tree = profiled
@@ -315,31 +313,16 @@ def quadtree_skyline(
     # invocations produce EQUAL analyzed plans and the cache manager can
     # substitute the persisted local pass on re-run (the same
     # build-once/probe-many reuse the twophase path gets for free).
-    @F.pandas_udf(T.StringType())
-    def assign_udf(*cols: pd.Series) -> pd.Series:
-        arrs = []
-        for c, (_, s) in zip(cols, dim_signs):
-            if pd.api.types.is_datetime64_any_dtype(c):
-                v = (c.astype("int64").to_numpy() // 1000).astype(np.float64) / 1e6
-            else:
-                v = c.to_numpy(dtype=np.float64)
-            arrs.append(s * v)
-        mat = np.column_stack(arrs)
-        return pd.Series(assign_cells(mat, tree))
+    def assign(*cols: pa.Array) -> pa.Array:
+        mat = arrow_coords(pa.Table.from_arrays(list(cols), names=dim_cols), dim_signs)
+        return pa.array(assign_cells(mat, tree), pa.string())
 
-    # The assignment UDF + combiner below are CPU-bound: if the PLANNED
-    # scan has fewer partitions than cores (one small/unsplittable
-    # parquet — the local testdata), fan out first so they parallelize.
-    # Splittable sources already scanning wide skip the exchange. At
-    # cluster scale input splits >> cores and this no-ops (same gate as
-    # skyline()'s twophase local pass).
-    from skylinemapreducehadoop_spark.operators._cache import scan_partitions
+    assign_udf = F.arrow_udf(assign, T.StringType())
 
-    fan = df
-    if 0 < scan_partitions(df) < spark.sparkContext.defaultParallelism:
-        fan = df.repartition(spark.sparkContext.defaultParallelism)
-
-    with_cell = fan.withColumn("__cell", assign_udf(*[F.col(c) for c in dim_cols]))
+    # The assignment UDF + combiner below are CPU-bound: fan a narrow
+    # scan out first so they parallelize (same gate as skyline()'s
+    # twophase local pass).
+    with_cell = fan_out(df).withColumn("__cell", assign_udf(*[F.col(c) for c in dim_cols]))
     routed = with_cell.where(F.col("__cell").isNotNull())
 
     # --- local skylines per cell. A map-side combine first runs the
@@ -352,24 +335,17 @@ def quadtree_skyline(
     out_schema = with_cell.schema
 
     def per_cell(tbl: pa.Table) -> pa.Table:
-        mask = skyline_mask(_signed_matrix(tbl, dim_signs))
+        mask = skyline_mask(arrow_coords(tbl, dim_signs))
         return tbl.filter(pa.array(mask))
 
-    from skylinemapreducehadoop_spark.operators.skyline import (
-        _persist_tracked,
-        grouped_combine_fn,
-    )
+    from skylinemapreducehadoop_spark.operators.skyline import grouped_combine_fn
 
     combined = routed.mapInArrow(grouped_combine_fn(["__cell"], dim_signs), out_schema)
-    local_sky = _persist_tracked(combined.groupBy("__cell").applyInArrow(per_cell, out_schema))
+    local_sky = persist_tracked(combined.groupBy("__cell").applyInArrow(per_cell, out_schema))
 
     # --- A5 VPn + A6 sky-filter points: JVM-side aggregates, collected
     # (|cells| × d doubles — the reference's DistributedCache payloads)
-    sexprs = [
-        (F.col(c) * F.lit(s)).cast("double").alias(f"__s{j}")
-        for j, (c, s) in enumerate(dim_signs)
-    ]
-    sky_signed = local_sky.select("__cell", *sexprs)
+    sky_signed = local_sky.select("__cell", *column_coords(local_sky, dim_signs))
     side_rows = (
         sky_signed.groupBy("__cell")
         .agg(
@@ -406,8 +382,7 @@ def quadtree_skyline(
 
     cell_index = {cid: i for i, cid in enumerate(cells)}
     b_ctx = spark.sparkContext.broadcast(
-        {"cells": cells, "index": cell_index, "vpn": vpn, "need": need,
-         "filter": filter_pts if prefilter else np.zeros((0, d))}
+        {"cells": cells, "index": cell_index, "vpn": vpn, "need": need, "filter": filter_pts}
     )
 
     # --- J1 prefilter + J2 replication in one pass over the (small)
@@ -424,12 +399,9 @@ def quadtree_skyline(
             if batch.num_rows == 0:
                 continue
             tbl = pa.Table.from_batches([batch])
-            vals = _signed_matrix(tbl, dim_signs)
-            if len(fpts):
-                le = (fpts[None, :, :] <= vals[:, None, :]).all(axis=2)
-                lt = (fpts[None, :, :] < vals[:, None, :]).any(axis=2)
-                alive = ~(le & lt).any(axis=1)
-                tbl, vals = tbl.filter(pa.array(alive)), vals[alive]
+            vals = arrow_coords(tbl, dim_signs)
+            alive = ~dominated_mask(vals, fpts)
+            tbl, vals = tbl.filter(pa.array(alive)), vals[alive]
             if tbl.num_rows == 0:
                 continue
             plus = tbl.append_column("__tag", pa.array(["+"] * tbl.num_rows))
@@ -437,9 +409,7 @@ def quadtree_skyline(
             # replicate p to cell c2 iff isNeeded(cell(p), c2) and
             # p dominates VPn(c2)
             src = np.array([cidx[c] for c in tbl.column("__cell").to_pylist()])
-            dom_le = (vals[:, None, :] <= vpns[None, :, :]).all(axis=2)
-            dom_lt = (vals[:, None, :] < vpns[None, :, :]).any(axis=2)
-            targets = dom_le & dom_lt & needm[src]
+            targets = dominance_matrix(vals, vpns) & needm[src]
             pi, ci = np.nonzero(targets)
             if len(pi):
                 star = tbl.take(pa.array(pi))
@@ -460,11 +430,8 @@ def quadtree_skyline(
         star = tbl.filter(pa.array(tags == "*"))
         if plus.num_rows == 0 or star.num_rows == 0:
             return plus
-        pv = _signed_matrix(plus, dim_signs)
-        sv = _signed_matrix(star, dim_signs)
-        le = (sv[None, :, :] <= pv[:, None, :]).all(axis=2)
-        lt = (sv[None, :, :] < pv[:, None, :]).any(axis=2)
-        return plus.filter(pa.array(~(le & lt).any(axis=1)))
+        hit = dominated_mask(arrow_coords(plus, dim_signs), arrow_coords(star, dim_signs))
+        return plus.filter(pa.array(~hit))
 
     result = merged.groupBy("__cell").applyInArrow(final_check, merge_schema)
     return result.drop("__cell", "__tag")

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from skylinemapreducehadoop_spark.operators._cache import fan_out
+
 
 def _as_matrix(vecs: pd.Series, dim: int) -> np.ndarray:
     out = np.zeros((len(vecs), dim), dtype=np.float64)
@@ -858,22 +860,6 @@ def embedding_dim_stats(
     )
 
 
-def _fan_out_for_pair_expand(df: DataFrame) -> DataFrame:
-    """Repartition a narrow scan before the dim^2/2 pair expansion of
-    :func:`gram_matrix` / :func:`covariance_matrix`: the chained
-    posexplode multiplies every row ~dim^2 times in pure CPU work, so a
-    single-split source (one small parquet — the local testdata) ran
-    the whole expansion on one core. The shuffle moves only the raw
-    vectors (tiny next to the expansion); at cluster scale input splits
-    >= cores and this no-ops."""
-    from skylinemapreducehadoop_spark.operators._cache import scan_partitions
-
-    sc = df.sparkSession.sparkContext
-    if 0 < scan_partitions(df) < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
-    return df
-
-
 def gram_matrix(
     df: DataFrame,
     *,
@@ -907,7 +893,10 @@ def gram_matrix(
     qvec = F.transform(
         F.col(vec_col), lambda v: F.round(v.cast("double") * q).cast("long")
     )
-    base = _fan_out_for_pair_expand(df.where(F.col(vec_col).isNotNull()))
+    # the chained posexplode multiplies every row ~dim^2 times in pure
+    # CPU work: fan a single-split source out first (the shuffle moves
+    # only the raw vectors, tiny next to the expansion)
+    base = fan_out(df.where(F.col(vec_col).isNotNull()))
     ex = (
         base.select(F.posexplode(qvec).alias("i", "__vi"), qvec.alias("__qv"))
         .select("i", "__vi", F.posexplode("__qv").alias("j", "__vj"))
@@ -946,7 +935,7 @@ def covariance_matrix(
     qvec = F.transform(
         F.col(vec_col), lambda v: F.round(v.cast("double") * q).cast("long")
     )
-    base = _fan_out_for_pair_expand(df.where(F.col(vec_col).isNotNull()))
+    base = fan_out(df.where(F.col(vec_col).isNotNull()))
     pairs = (
         base.select(F.posexplode(qvec).alias("i", "__vi"), qvec.alias("__qv"))
         .select("i", "__vi", F.posexplode("__qv").alias("j", "__vj"))

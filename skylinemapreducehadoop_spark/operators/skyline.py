@@ -6,7 +6,7 @@ Re-expresses the reference engine's three-job MapReduce pipeline
 
 Physical plan (strategy="twophase", the default):
 
-1. **Local pass** — ``mapInPandas`` computes a per-partition skyline.
+1. **Local pass** — ``mapInArrow`` computes a per-partition skyline.
    This is the Spark analogue of the reference's combiner-equals-reducer
    trick (``/root/reference/Skyline.java:408``): it is correct because
    ``skyline(skyline(A) ∪ skyline(B)) == skyline(A ∪ B)`` for any
@@ -14,11 +14,11 @@ Physical plan (strategy="twophase", the default):
    map-side reduction that makes the shuffle tiny: each of the ~N scan
    partitions emits only its Pareto set.
 2. **Merge pass(es)** — the union of local skylines is re-partitioned
-   down (optionally through intermediate tree-reduction levels) and the
-   same kernel runs again; the last level is a single partition, which
-   replaces the reference's hard-coded single reducer
-   (``/root/reference/Skyline.java:414``) but only ever sees
-   already-reduced data.
+   down (through intermediate tree-reduction levels when the measured
+   candidate count needs them) and the same kernel runs again; the last
+   level is a single partition, which replaces the reference's
+   hard-coded single reducer (reference ``Skyline.java:414``) but
+   only ever sees already-reduced data.
 
 strategy="quadtree" routes to the dominance-aware quadtree partitioner
 (see ``operators/quadtree.py``), the reference's actual contribution:
@@ -28,7 +28,13 @@ pass and bound the merge fan-in.
 Null semantics: rows with NULL in any skyline dimension are excluded
 (documented engine semantics; the reference would corrupt on its
 missing-value sentinels — SURVEY.md §1.2). The null filter is applied
-Spark-side with ``dropna`` so Catalyst pushes IsNotNull into the scan.
+Spark-side as a conjunction of IsNotNull so Catalyst pushes it into the
+scan.
+
+Every operator here encodes dimension values and tests dominance only
+through ``operators/_kernel.py`` (one Arrow encoder, one Column
+encoder, one dominance primitive), so numeric, DATE and TIMESTAMP
+dimensions behave the same under every strategy.
 """
 
 from __future__ import annotations
@@ -42,7 +48,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from skylinemapreducehadoop_spark.operators._kernel import skyline_mask
+from skylinemapreducehadoop_spark.operators._cache import fan_out, persist_tracked
+from skylinemapreducehadoop_spark.operators._kernel import (
+    arrow_coords,
+    column_coords,
+    dominated_mask,
+    dominator_counts,
+    skyline_mask,
+)
 
 DimSpec = Sequence[tuple[str, str]]
 
@@ -81,45 +94,11 @@ def normalize_dims(dims: DimSpec) -> list[tuple[str, float]]:
     return out
 
 
-def _values_matrix(pdf: pd.DataFrame, dim_signs: list[tuple[str, float]]) -> np.ndarray:
-    """Extract the (n, d) min-normalized float matrix from a pandas frame.
-
-    Timestamps/dates compare by their integer epoch representation;
-    everything else is cast to float64.
-    """
-    n = len(pdf)
-    arr = np.empty((n, len(dim_signs)), dtype=np.float64)
-    for j, (col, sign) in enumerate(dim_signs):
-        s = pdf[col]
-        if pd.api.types.is_datetime64_any_dtype(s):
-            vals = s.astype("int64").to_numpy(dtype=np.float64)
-        else:
-            vals = s.to_numpy(dtype=np.float64, na_value=np.nan)
-        arr[:, j] = sign * vals
-    return arr
-
-
-def _arrow_matrix(tbl: "pa.Table", dim_signs: list[tuple[str, float]]) -> np.ndarray:
-    """(n, d) min-normalized matrix straight from Arrow columns — no
-    pandas conversion, so non-dimension columns are never touched and
-    int64 values survive bit-exact (pandas would round-trip nullable
-    ints through float64, corrupting values above 2^53)."""
-    n = tbl.num_rows
-    arr = np.empty((n, len(dim_signs)), dtype=np.float64)
-    for j, (col, sign) in enumerate(dim_signs):
-        c = tbl.column(col)
-        if pa.types.is_timestamp(c.type) or pa.types.is_date(c.type):
-            c = c.cast(pa.int64())
-        vals = c.to_numpy(zero_copy_only=False).astype(np.float64)
-        arr[:, j] = sign * vals
-    return arr
-
-
-def _arrow_skyline(tbl: "pa.Table", dim_signs: list[tuple[str, float]]) -> "pa.Table":
+def _arrow_skyline(tbl: pa.Table, dim_signs: list[tuple[str, float]]) -> pa.Table:
     """Skyline of one in-memory Arrow table (dims already non-null)."""
     if tbl.num_rows == 0:
         return tbl
-    mask = skyline_mask(_arrow_matrix(tbl, dim_signs))
+    mask = skyline_mask(arrow_coords(tbl, dim_signs))
     return tbl.filter(pa.array(mask))
 
 
@@ -131,8 +110,8 @@ def pandas_skyline(pdf: pd.DataFrame, dim_signs: list[tuple[str, float]]) -> pd.
     pdf = pdf.dropna(subset=cols)
     if len(pdf) == 0:
         return pdf
-    mask = skyline_mask(_values_matrix(pdf, dim_signs))
-    return pdf.loc[mask]
+    dims = pa.Table.from_pandas(pdf[cols], preserve_index=False)
+    return pdf.loc[skyline_mask(arrow_coords(dims, dim_signs))]
 
 
 def _partition_skyline_fn(dim_signs: list[tuple[str, float]]):
@@ -157,17 +136,20 @@ def _partition_skyline_fn(dim_signs: list[tuple[str, float]]):
     return fn
 
 
+# Tuning constants, read at call time (tests monkeypatch them to force
+# the multi-level tree, the blocked merge's block pairs and the blocked
+# candidate verification on small inputs).
 #: rows one merge task handles comfortably (vectorized SFS kernel)
 _MERGE_BATCH_ROWS = 1_000_000
 #: upstream partitions absorbed per task at each extra tree level
 _MERGE_FAN_IN = 16
-
-# bounded registry of per-query persisted frames — shared by every
-# operator that materializes a multiply-consumed intermediate (see
-# operators/_cache.py for the eviction semantics)
-from skylinemapreducehadoop_spark.operators._cache import (
-    persist_tracked as _persist_tracked,
-)
+#: candidates per block of the blocked merge
+_BLOCKED_ROWS = 65_536
+#: candidate verification: sets up to this size are broadcast ...
+_BROADCAST_ROWS = 1_000_000
+#: ... larger ones are counted per (candidate block, data block) pair
+_CAND_BLOCK_ROWS = 65_536
+_DATA_BLOCK_ROWS = 1 << 20
 
 
 def skyline(
@@ -175,16 +157,13 @@ def skyline(
     dims: DimSpec,
     *,
     strategy: str = "twophase",
-    reduce_levels: int | None = None,
-    merge_batch_rows: int = _MERGE_BATCH_ROWS,
     merge: str = "tree",
-    blocked_rows: int = 65_536,
-    quadtree_opts: dict | None = None,
 ) -> DataFrame:
     """Pareto-optimal rows of ``df`` under per-dimension min/max directions.
 
     dims: sequence of ``(column, 'min'|'max')`` — the engine's query knob,
     mirroring the reference's per-dimension ``value_type`` directions.
+    Numeric, DATE and TIMESTAMP columns are all valid dimensions.
 
     strategy:
       - ``"twophase"`` (default): per-partition local skyline then
@@ -203,19 +182,17 @@ def skyline(
       - ``"blocked"``: fully distributed block-nested verification — NO
         single-partition stage anywhere, so even a Pareto set far larger
         than one task's memory works. Candidates are hashed into B
-        blocks (B = ceil(|candidates| / blocked_rows)); every (i, j)
-        block pair is checked in its own task via cogroup, and a row
-        survives iff no block dominates it. Costs a B-way replication
-        shuffle — opt in for anti-correlated data at extreme scale.
+        blocks of at most ``_BLOCKED_ROWS``; every (i, j) block pair is
+        checked in its own task via cogroup, and a row survives iff no
+        block dominates it. Costs a B-way replication shuffle — opt in
+        for anti-correlated data at extreme scale.
 
-    NOTE (declarative-API caveat): with the default
-    ``reduce_levels=None``, CALLING this function runs one Spark job
-    eagerly for BOTH merge modes — the local pass is persisted and
-    counted so the auto guard can size its merge levels (tree) or its
-    block count (blocked) from the measured candidate count; the count
-    job fills the cache the merge plan then reuses, so the kernel runs
-    once. Pass ``reduce_levels`` explicitly with ``merge="tree"`` for
-    fully lazy plan construction.
+    NOTE (declarative-API caveat): CALLING this function with the
+    twophase strategy always runs one Spark job eagerly, for both merge
+    modes — the local pass is persisted and counted so the guard can
+    size its merge levels (tree) or its block count (blocked) from the
+    measured candidate count; the count job fills the cache the merge
+    plan then reuses, so the kernel runs once.
     """
     dim_signs = normalize_dims(dims)
     dim_cols = [c for c, _ in dim_signs]
@@ -232,55 +209,34 @@ def skyline(
     if strategy == "quadtree":
         from skylinemapreducehadoop_spark.operators.quadtree import quadtree_skyline
 
-        return quadtree_skyline(clean, dim_signs, **(quadtree_opts or {}))
+        return quadtree_skyline(clean, dim_signs)
 
     if strategy != "twophase":
         raise ValueError(f"unknown strategy {strategy!r}")
-
-    # The local pass is CPU-bound kernel work: if the PLANNED scan has
-    # fewer partitions than cores (small files / single unsplittable
-    # parquet), fan out first. Splittable sources (text under
-    # minPartitionNum) already scan wide — skip the redundant exchange.
-    # At cluster scale input splits >> cores and this no-ops.
-    from skylinemapreducehadoop_spark.operators._cache import scan_partitions
-
-    sc = df.sparkSession.sparkContext
-    if 0 < scan_partitions(clean) < sc.defaultParallelism:
-        clean = clean.repartition(sc.defaultParallelism)
-    local = clean.mapInArrow(fn, df.schema)
-
-    if merge == "blocked":
-        return _blocked_merge(local, dim_signs, blocked_rows)
-    if merge != "tree":
+    if merge not in ("tree", "blocked"):
         raise ValueError(f"unknown merge {merge!r}")
+
+    # the local pass is CPU-bound kernel work: fan a narrow scan out
+    local = fan_out(clean).mapInArrow(fn, df.schema)
+    if merge == "blocked":
+        return _blocked_merge(local, dim_signs)
 
     # Tree-reduce the union of local skylines down to one partition.
     # The final merge MUST be a single partition (global dominance needs
     # every surviving candidate in one place — the reference's single
     # reducer, /root/reference/Skyline.java:414), but on anti-correlated
     # data the union of local skylines can be huge, so intermediate
-    # levels bound each merge task's fan-in.
-    if reduce_levels is None:
-        # auto guard: materialize the (small) local skyline once and
-        # measure it; widths then cap rows-per-merge-task. The persist
-        # means the local pass is not recomputed by the merge.
-        local = _persist_tracked(local)
-        n_local = local.count()
-        widths: list[int] = []
-        w = -(-n_local // merge_batch_rows)  # ceil
-        while w > 1:
-            widths.append(int(w))
-            w = -(-w // _MERGE_FAN_IN)
-    else:
-        # explicit override: reduce_levels-1 intermediate levels with
-        # sqrt-decaying widths (legacy behavior)
-        widths = []
-        n_parts = max(sc.defaultParallelism if reduce_levels > 1 else 1, 1)
-        for _ in range(max(reduce_levels - 1, 0)):
-            n_parts = max(int(np.sqrt(n_parts)), 1)
-            if n_parts <= 1:
-                break
-            widths.append(n_parts)
+    # levels bound each merge task's fan-in. The guard materializes the
+    # (small) local skyline once and measures it; widths then cap
+    # rows-per-merge-task. The persist means the merge does not
+    # recompute the local pass.
+    local = persist_tracked(local)
+    n_local = local.count()
+    widths: list[int] = []
+    w = -(-n_local // _MERGE_BATCH_ROWS)  # ceil
+    while w > 1:
+        widths.append(int(w))
+        w = -(-w // _MERGE_FAN_IN)
 
     current = local
     for w in widths:
@@ -288,7 +244,7 @@ def skyline(
     return current.repartition(1).mapInArrow(fn, df.schema)
 
 
-def _blocked_merge(local: DataFrame, dim_signs: list[tuple[str, float]], blocked_rows: int) -> DataFrame:
+def _blocked_merge(local: DataFrame, dim_signs: list[tuple[str, float]]) -> DataFrame:
     """Distributed global verification of local-skyline candidates with
     no single-partition stage (see ``skyline(merge="blocked")``).
 
@@ -318,23 +274,15 @@ def _blocked_merge(local: DataFrame, dim_signs: list[tuple[str, float]], blocked
     (no eager ``localCheckpoint`` — that was a 6x wall-clock overhead
     at sf0.1; see PLANS.md §15); correctness no longer leans on it.
     """
-    d = len(dim_signs)
-    spark = local.sparkSession
-
-    local = _persist_tracked(local)
+    local = persist_tracked(local)
     n_cand = local.count()
     if n_cand == 0:
         return local
-    n_blocks = max(1, -(-n_cand // blocked_rows))
+    n_blocks = max(1, -(-n_cand // _BLOCKED_ROWS))
     tagged = local.withColumn(
         "__rid", F.md5(F.to_json(F.struct(*[F.col(c) for c in local.columns])))
     )
-
-    sexprs = [
-        (F.col(c).cast("double") * F.lit(s)).alias(f"__s{k}")
-        for k, (c, s) in enumerate(dim_signs)
-    ]
-    slim = tagged.select("__rid", *sexprs).withColumn(
+    slim = tagged.select("__rid", *column_coords(tagged, dim_signs)).withColumn(
         "__blk", F.pmod(F.hash("__rid"), F.lit(n_blocks)).cast("int")
     )
     opp = F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("__opp")
@@ -342,131 +290,88 @@ def _blocked_merge(local: DataFrame, dim_signs: list[tuple[str, float]], blocked
     # (candidate block, own block) — cogroup co-locates each pair
     cand_side = slim.select("*", opp)
     opp_side = slim.select("*", opp).withColumnRenamed("__opp", "__cand_blk")
+    # the __s columns are already coordinates: encode them unsigned
+    coords = [(f"__s{k}", 1.0) for k in range(len(dim_signs))]
 
-    scols = [f"__s{k}" for k in range(d)]
-
-    def dominated_ids(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame({"__rid": pd.Series([], dtype="object")})
-        lv = left[scols].to_numpy(dtype=np.float64)
-        rv = right[scols].to_numpy(dtype=np.float64)
-        out = np.zeros(len(lv), dtype=bool)
-        # chunk candidates so the pairwise bool block stays ~64 MB
-        step = max(1, (1 << 26) // max(len(rv), 1))
-        for s0 in range(0, len(lv), step):
-            lc = lv[s0 : s0 + step]
-            le = (rv[None, :, :] <= lc[:, None, :]).all(axis=2)
-            lt = (rv[None, :, :] < lc[:, None, :]).any(axis=2)
-            out[s0 : s0 + step] = (le & lt).any(axis=1)
-        return pd.DataFrame({"__rid": left["__rid"].to_numpy()[out]})
+    def dominated_ids(left: pa.Table, right: pa.Table) -> pa.Table:
+        hit = dominated_mask(arrow_coords(left, coords), arrow_coords(right, coords))
+        return left.select(["__rid"]).filter(pa.array(hit))
 
     dominated = (
         cand_side.groupBy("__blk", "__opp")
         .cogroup(opp_side.groupBy("__cand_blk", "__blk"))
-        .applyInPandas(lambda l, r: dominated_ids(l, r), "__rid string")
+        .applyInArrow(dominated_ids, "__rid string")
         .distinct()
     )
     return tagged.join(dominated, "__rid", "left_anti").drop("__rid")
 
 
-def _dominator_counts(cand: np.ndarray, rows: np.ndarray, chunk: int = 4096) -> np.ndarray:
-    """For each candidate vector, how many of ``rows`` strictly dominate
-    it (min-normalized values; duplicates count, ties don't dominate)."""
-    counts = np.zeros(len(cand), dtype=np.int64)
-    for s0 in range(0, len(rows), chunk):
-        x = rows[s0 : s0 + chunk]
-        le = (x[:, None, :] <= cand[None, :, :]).all(axis=2)
-        lt = (x[:, None, :] < cand[None, :, :]).any(axis=2)
-        counts += (le & lt).sum(axis=0)
-    return counts
+def count_filter_fn(dim_signs: list[tuple[str, float]], count_fn, k: int):
+    """``mapInArrow`` function: keep the partition's rows with fewer than
+    ``k`` violators among the partition's own rows, where
+    ``count_fn(rows, opponents)`` counts each row's violators. The
+    partition is buffered (a Spark partition is sized to memory)."""
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        parts = [pa.Table.from_batches([b]) for b in batches if b.num_rows]
+        if not parts:
+            return
+        tbl = pa.concat_tables(parts).combine_chunks()
+        vals = arrow_coords(tbl, dim_signs)
+        out = tbl.filter(pa.array(count_fn(vals, vals) < k))
+        if out.num_rows:
+            yield from out.to_batches()
+
+    return fn
 
 
-def skyline_kband(
-    df: DataFrame,
-    dims: DimSpec,
+def verify_candidates(
+    clean: DataFrame,
+    cand: DataFrame,
+    dim_signs: list[tuple[str, float]],
+    count_fn,
     k: int,
-    *,
-    broadcast_rows: int = 1_000_000,
-    cand_block_rows: int = 65_536,
-    data_block_rows: int = 1 << 20,
 ) -> DataFrame:
-    """k-skyband: rows dominated by FEWER than ``k`` rows (k=1 is the
-    skyline). The classic relaxation for "top candidates with slack".
+    """Rows of ``clean`` whose dimension vector is a candidate with fewer
+    than ``k`` violators in all of ``clean``.
 
-    Two-phase, superset-safe: a row in the global k-skyband has < k
-    dominators globally, hence < k within its own partition — so the
-    union of per-partition k-skybands is a superset of the answer.
-    Phase 1 computes that candidate set (distributed; persisted, never
-    collected wholesale). Phase 2 counts each candidate's dominators in
-    the full data by size:
+    ``cand`` holds distinct dimension vectors (a superset of the
+    answer); ``count_fn(cand_coords, data_coords)`` counts, per
+    candidate, the data rows that violate it. The candidates are
+    counted against the full data by size:
 
-    - ``|cand| <= broadcast_rows``: the candidate *vectors* are
+    - ``|cand| <= _BROADCAST_ROWS``: the candidate *vectors* are
       broadcast and ONE distributed pass computes map-side partial
       counts (counts, not rows, cross the wire).
     - larger (anti-correlated data can make the candidate set O(n)):
       fully distributed two-sided blocked counting — candidates hashed
       into B blocks, data into D blocks, every (B, D) pair cogrouped in
-      its own task (the ``_blocked_merge`` pattern), partial counts
-      summed per candidate vector. No driver materialization and no
-      task ever holds more than one block pair.
+      its own task, partial counts summed per candidate vector. No
+      driver materialization and no task ever holds more than one
+      block pair.
 
-    The final filter is a semi-join of ``df`` on the qualifying
-    vectors, so duplicates of qualifying rows all survive (ties never
-    dominate). The broadcast hint is only applied on the small path;
-    the blocked path lets AQE pick the join strategy.
+    The result is a semi-join of ``clean`` on the qualifying vectors,
+    so duplicates of qualifying rows all survive. The broadcast hint is
+    only applied on the small path; the blocked path lets AQE pick the
+    join strategy.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    dim_signs = normalize_dims(dims)
     dim_cols = [c for c, _ in dim_signs]
-    clean = _drop_null_dims(df, dim_cols)
-    spark = df.sparkSession
-
-    def local_kband(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # k-band needs within-partition dominator counts, so the
-        # partition is buffered (a Spark partition is sized to memory)
-        parts = [pa.Table.from_batches([b]) for b in batches if b.num_rows]
-        if not parts:
-            return
-        tbl = pa.concat_tables(parts).combine_chunks()
-        vals = _arrow_matrix(tbl, dim_signs)
-        keep = _dominator_counts(vals, vals) < k
-        out = tbl.filter(pa.array(keep))
-        if out.num_rows:
-            yield from out.to_batches()
-
-    cand_rows = _persist_tracked(
-        clean.mapInArrow(local_kband, df.schema).select(*dim_cols).distinct()
-    )
-    n_cand = cand_rows.count()
+    n_cand = cand.count()
     if n_cand == 0:
         return clean.limit(0)
-
-    if n_cand <= broadcast_rows:
-        qdf = _kband_count_broadcast(clean, cand_rows, dim_signs, k)
-        return clean.join(F.broadcast(qdf), on=dim_cols, how="left_semi")
-    qdf = _kband_count_blocked(
-        clean, cand_rows, dim_signs, k, n_cand, cand_block_rows, data_block_rows
-    )
-    return clean.join(qdf, on=dim_cols, how="left_semi")
+    if n_cand <= _BROADCAST_ROWS:
+        keep = _count_broadcast(clean, cand, dim_signs, count_fn, k)
+        return clean.join(F.broadcast(keep), on=dim_cols, how="left_semi")
+    keep = _count_blocked(clean, cand, dim_signs, count_fn, k, n_cand)
+    return clean.join(keep, on=dim_cols, how="left_semi")
 
 
-def _kband_count_broadcast(
-    clean: DataFrame, cand_rows: DataFrame, dim_signs: list[tuple[str, float]], k: int
-) -> DataFrame:
-    """Phase-2 dominator counting for a driver-small candidate set."""
+def _count_broadcast(clean, cand, dim_signs, count_fn, k) -> DataFrame:
+    """Verification for a driver-small candidate set."""
     spark = clean.sparkSession
     dim_cols = [c for c, _ in dim_signs]
-    # toArrow keeps timestamp units identical to the executor-side
-    # _arrow_matrix conversion (a pandas round-trip would be in ns)
-    cand_tbl = cand_rows.toArrow()
-    cand = _arrow_matrix(cand_tbl, dim_signs)
-    cand_pdf = cand_tbl.to_pandas()
-    b_cand = spark.sparkContext.broadcast(cand)
-
-    count_schema = T.StructType(
-        [T.StructField("__idx", T.LongType()), T.StructField("__cnt", T.LongType())]
-    )
+    cand_tbl = cand.toArrow()
+    b_cand = spark.sparkContext.broadcast(arrow_coords(cand_tbl, dim_signs))
 
     def partial_counts(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         c = b_cand.value
@@ -476,49 +381,39 @@ def _kband_count_broadcast(
             if batch.num_rows == 0:
                 continue
             seen = True
-            tbl = pa.Table.from_batches([batch])
-            total += _dominator_counts(c, _arrow_matrix(tbl, dim_signs))
+            total += count_fn(c, arrow_coords(pa.Table.from_batches([batch]), dim_signs))
         if seen:
             yield pa.RecordBatch.from_arrays(
-                [pa.array(np.arange(len(c))), pa.array(total)],
-                schema=pa.schema([("__idx", pa.int64()), ("__cnt", pa.int64())]),
+                [pa.array(np.arange(len(c))), pa.array(total)], names=["__idx", "__cnt"]
             )
 
     totals = (
         clean.select(*dim_cols)
-        .mapInArrow(partial_counts, count_schema)
+        .mapInArrow(partial_counts, "__idx long, __cnt long")
         .groupBy("__idx")
-        .agg(F.sum("__cnt").alias("n_dom"))
+        .agg(F.sum("__cnt").alias("n"))
         .collect()
     )
-    n_dom = np.zeros(len(cand), dtype=np.int64)
+    n = np.zeros(cand_tbl.num_rows, dtype=np.int64)
     for r in totals:
-        n_dom[r["__idx"]] = r["n_dom"]
-    return spark.createDataFrame(cand_pdf.loc[n_dom < k, dim_cols])
+        n[r["__idx"]] = r["n"]
+    return spark.createDataFrame(cand_tbl.filter(pa.array(n < k)), schema=cand.schema)
 
 
-def _kband_count_blocked(
-    clean: DataFrame,
-    cand_rows: DataFrame,
-    dim_signs: list[tuple[str, float]],
-    k: int,
-    n_cand: int,
-    cand_block_rows: int,
-    data_block_rows: int,
-) -> DataFrame:
-    """Phase-2 dominator counting with no driver-side candidate
-    materialization: every (candidate-block, data-block) pair is
-    counted in its own cogroup task; per-pair partial counts are summed
-    per candidate vector. Shuffle cost is B×|data| + D×|cand| rows of
-    dimension columns only — the price of exact counting at O(n)
-    candidate cardinality, paid distributed instead of on the driver."""
+def _count_blocked(clean, cand, dim_signs, count_fn, k, n_cand) -> DataFrame:
+    """Verification with no driver-side candidate materialization: every
+    (candidate-block, data-block) pair is counted in its own cogroup
+    task; per-pair partial counts are summed per candidate vector.
+    Shuffle cost is B×|data| + D×|cand| rows of dimension columns only —
+    the price of exact counting at O(n) candidate cardinality, paid
+    distributed instead of on the driver."""
     dim_cols = [c for c, _ in dim_signs]
     n_data = clean.count()
-    B = max(1, -(-n_cand // cand_block_rows))
-    D = max(1, -(-n_data // data_block_rows))
+    B = max(1, -(-n_cand // _CAND_BLOCK_ROWS))
+    D = max(1, -(-n_data // _DATA_BLOCK_ROWS))
 
     cand_side = (
-        cand_rows.withColumn("__cblk", F.pmod(F.hash(*dim_cols), F.lit(B)).cast("int"))
+        cand.withColumn("__cblk", F.pmod(F.hash(*dim_cols), F.lit(B)).cast("int"))
         .select("*", F.explode(F.sequence(F.lit(0), F.lit(D - 1))).alias("__dblk"))
     )
     data_side = (
@@ -526,31 +421,50 @@ def _kband_count_blocked(
         .withColumn("__dblk", F.pmod(F.hash(*dim_cols), F.lit(D)).cast("int"))
         .select("*", F.explode(F.sequence(F.lit(0), F.lit(B - 1))).alias("__cblk"))
     )
+    out_schema = T.StructType(
+        [clean.schema[c] for c in dim_cols] + [T.StructField("__cnt", T.LongType())]
+    )
 
-    out_fields = [clean.schema[c] for c in dim_cols] + [
-        T.StructField("__cnt", T.LongType(), False)
-    ]
-    out_schema = T.StructType(out_fields)
-
-    def pair_counts(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        cand_pdf = left.drop(columns=["__cblk", "__dblk"])
-        cmat = _values_matrix(cand_pdf, dim_signs)
-        dmat = _values_matrix(right, dim_signs)
-        out = cand_pdf.copy()
-        out["__cnt"] = _dominator_counts(cmat, dmat)
-        return out
+    def pair_counts(left: pa.Table, right: pa.Table) -> pa.Table:
+        vecs = left.select(dim_cols)
+        cnt = count_fn(arrow_coords(vecs, dim_signs), arrow_coords(right, dim_signs))
+        return vecs.append_column("__cnt", pa.array(cnt, pa.int64()))
 
     partial = (
         cand_side.groupBy("__cblk", "__dblk")
         .cogroup(data_side.groupBy("__cblk", "__dblk"))
-        .applyInPandas(pair_counts, out_schema)
+        .applyInArrow(pair_counts, out_schema)
     )
     return (
         partial.groupBy(*dim_cols)
-        .agg(F.sum("__cnt").alias("__n_dom"))
-        .where(F.col("__n_dom") < k)
+        .agg(F.sum("__cnt").alias("__n"))
+        .where(F.col("__n") < k)
         .select(*dim_cols)
     )
+
+
+def skyline_kband(df: DataFrame, dims: DimSpec, k: int) -> DataFrame:
+    """k-skyband: rows dominated by FEWER than ``k`` rows (k=1 is the
+    skyline). The classic relaxation for "top candidates with slack".
+
+    Two-phase, superset-safe: a row in the global k-skyband has < k
+    dominators globally, hence < k within its own partition — so the
+    union of per-partition k-skybands is a superset of the answer.
+    Phase 1 computes that candidate set (distributed; persisted, never
+    collected wholesale). Phase 2 counts each candidate's dominators in
+    the full data (:func:`verify_candidates`); duplicates of qualifying
+    rows all survive (ties never dominate).
+    """
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    dim_signs = normalize_dims(dims)
+    dim_cols = [c for c, _ in dim_signs]
+    clean = _drop_null_dims(df, dim_cols)
+    local_kband = count_filter_fn(dim_signs, dominator_counts, k)
+    cand = persist_tracked(
+        clean.mapInArrow(local_kband, df.schema).select(*dim_cols).distinct()
+    )
+    return verify_candidates(clean, cand, dim_signs, dominator_counts, k)
 
 
 def grouped_combine_fn(key_cols: Sequence[str], dim_signs: list[tuple[str, float]], flush_rows: int = 1 << 19):
@@ -577,7 +491,7 @@ def grouped_combine_fn(key_cols: Sequence[str], dim_signs: list[tuple[str, float
             return tbl
         key_pdf = tbl.select(key_cols).to_pandas()
         codes = key_pdf.groupby(key_cols, sort=False, dropna=False).ngroup().to_numpy()
-        mat = _arrow_matrix(tbl, dim_signs)
+        mat = arrow_coords(tbl, dim_signs)
         keep = np.zeros(tbl.num_rows, dtype=bool)
         order = np.argsort(codes, kind="stable")
         bounds = np.flatnonzero(np.diff(codes[order])) + 1
@@ -604,13 +518,7 @@ def grouped_combine_fn(key_cols: Sequence[str], dim_signs: list[tuple[str, float
     return local_combine
 
 
-def skyline_by(
-    df: DataFrame,
-    keys: Sequence[str] | str,
-    dims: DimSpec,
-    *,
-    combine: bool | None = None,
-) -> DataFrame:
+def skyline_by(df: DataFrame, keys: Sequence[str] | str, dims: DimSpec) -> DataFrame:
     """Grouped skyline: the Pareto set within each group of ``keys``.
 
     Composition the reference cannot express (its cell grouping is
@@ -621,41 +529,35 @@ def skyline_by(
     few groups × billions of rows) would funnel ALL data through a
     handful of group tasks.
 
-    ``combine=None`` decides from the deployment: the combine's win is
-    replacing a NETWORK shuffle of all rows with one of tiny Pareto
-    sets, paid for with one extra Arrow pass over the data. On a real
-    cluster that trade always wins at volume → combine. On ``local[*]``
-    there is no network — the "shuffle" is in-process memory/disk, so
-    the extra pass costs more than it saves (measured 2-3.5× slower on
-    600k-row scans AND joins) → direct groupBy, whose per-group kernel
-    tasks are the same work the combine's final stage would do anyway.
-    Pass ``combine=True/False`` to override either way.
+    Whether to combine is decided from the deployment: the combine's
+    win is replacing a NETWORK shuffle of all rows with one of tiny
+    Pareto sets, paid for with one extra Arrow pass over the data. On a
+    real cluster that trade always wins at volume → combine. On
+    ``local[*]`` there is no network — the "shuffle" is in-process
+    memory/disk, so the extra pass costs more than it saves (measured
+    2-3.5× slower on 600k-row scans AND joins) → direct groupBy, whose
+    per-group kernel tasks are the same work the combine's final stage
+    would do anyway.
     """
     if isinstance(keys, str):
         keys = [keys]
     dim_signs = normalize_dims(dims)
     clean = _drop_null_dims(df, [c for c, _ in dim_signs])
-
     key_cols = list(keys)
-    local_combine = grouped_combine_fn(key_cols, dim_signs)
 
     def per_group(tbl: pa.Table) -> pa.Table:
         return _arrow_skyline(tbl, dim_signs)
 
-    if combine is None:
-        # sparkContext is unavailable under Spark Connect — default to
-        # combine=True there (the cluster-shaped choice). Match only
-        # REAL local masters: 'local' / 'local[...]' — NOT
-        # 'local-cluster[...]', which simulates real executors with a
-        # network shuffle and wants the combine.
-        try:
-            master = (df.sparkSession.sparkContext.master or "").lower()
-        except Exception:
-            master = ""
-        combine = not (master == "local" or master.startswith("local["))
-    if combine:
-        local = clean.mapInArrow(local_combine, df.schema)
-        return local.groupBy(*key_cols).applyInArrow(per_group, df.schema)
+    # sparkContext is unavailable under Spark Connect — combine there
+    # (the cluster-shaped choice). Match only REAL local masters:
+    # 'local' / 'local[...]' — NOT 'local-cluster[...]', which simulates
+    # real executors with a network shuffle and wants the combine.
+    try:
+        master = (df.sparkSession.sparkContext.master or "").lower()
+    except Exception:
+        master = ""
+    if not (master == "local" or master.startswith("local[")):
+        clean = clean.mapInArrow(grouped_combine_fn(key_cols, dim_signs), df.schema)
     return clean.groupBy(*key_cols).applyInArrow(per_group, df.schema)
 
 
@@ -678,7 +580,7 @@ def skyline_layers(df: DataFrame, dims: DimSpec, n_layers: int) -> DataFrame:
         # sky caches stay pinned (they ARE the output); each round's
         # remaining is unpersisted once the next round's is materialized
         # (layer 1's `remaining` is the caller's frame — never touched).
-        sky = _persist_tracked(skyline(remaining, dims))
+        sky = persist_tracked(skyline(remaining, dims))
         tagged = sky.withColumn("layer", F.lit(layer))
         out = tagged if out is None else out.unionByName(tagged)
         if layer < n_layers:

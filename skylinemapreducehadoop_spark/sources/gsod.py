@@ -61,11 +61,9 @@ def read_gsod(spark: SparkSession, path: str) -> DataFrame:
     # single-file text ingest) instead of a session-global
     # spark.sql.files.minPartitionNum floor, which taxed every parquet
     # scan with cpu-count planned splits.
-    from skylinemapreducehadoop_spark.operators._cache import scan_partitions
+    from skylinemapreducehadoop_spark.operators._cache import fan_out
 
-    par = spark.sparkContext.defaultParallelism
-    if 0 < scan_partitions(raw) < par:
-        lines = lines.repartition(par)
+    lines = fan_out(lines)
     cols = []
     for name, start, end, sentinel, _ in GSOD_FIELDS:
         # substring is 1-based; length = end - start

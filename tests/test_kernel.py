@@ -7,7 +7,14 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from skylinemapreducehadoop_spark.operators._kernel import dominates, skyline_mask
+from skylinemapreducehadoop_spark.operators import _kernel
+from skylinemapreducehadoop_spark.operators._kernel import (
+    dominance_matrix,
+    dominated_mask,
+    dominates,
+    dominator_counts,
+    skyline_mask,
+)
 
 
 def brute_force_mask(values: np.ndarray) -> np.ndarray:
@@ -78,12 +85,38 @@ def test_matches_brute_force(seed, d):
     assert skyline_mask(pts).tolist() == brute_force_mask(pts).tolist()
 
 
-def test_chunking_invariance():
+def test_chunking_invariance(monkeypatch):
     rng = np.random.RandomState(7)
     pts = rng.randint(0, 10, size=(500, 3)).astype(float)
     ref = skyline_mask(pts)
+    # the pairwise primitives against an unchunked oracle:
+    # pair[i, j] = opponent j strictly dominates row i
+    rows, opp = pts[:120], pts[200:290]
+    pair = (opp[None, :, :] <= rows[:, None, :]).all(axis=2) & (
+        opp[None, :, :] < rows[:, None, :]
+    ).any(axis=2)
     for chunk in (1, 7, 64, 1000):
         assert (skyline_mask(pts, chunk=chunk) == ref).all()
+        # the same sizes as the cell budget of one broadcast block
+        monkeypatch.setattr(_kernel, "_BLOCK_CELLS", chunk)
+        assert (dominated_mask(rows, opp) == pair.any(axis=1)).all(), chunk
+        assert (dominator_counts(rows, opp) == pair.sum(axis=1)).all(), chunk
+        assert (dominance_matrix(opp, rows) == pair.T).all(), chunk
+        assert (skyline_mask(rows, chunk=chunk) == brute_force_mask(rows)).all(), chunk
+        monkeypatch.undo()
+
+
+def test_sum_ties_keep_dominator_first():
+    """At epoch-µs magnitude (~1.7e15, one float64 step is 0.25) the row
+    sums round equal when the other dims differ by less than 0.125. The
+    SFS order must still put the dominator before the rows it dominates,
+    or a dominated row from an earlier chunk stays in the window."""
+    rng = np.random.RandomState(5)
+    n = 3 * _kernel._CHUNK
+    pts = np.column_stack([np.full(n, 1.7e15), rng.uniform(0.0, 0.1, n)])
+    pts[-1, 1] = -0.01  # the one dominator, last in input order
+    assert (pts.sum(axis=1) == pts[0].sum()).all()
+    assert np.flatnonzero(skyline_mask(pts)).tolist() == [n - 1]
 
 
 # --- metamorphic laws -------------------------------------------------------

@@ -2,10 +2,15 @@
 
 from __future__ import annotations
 
+import importlib
+
 import numpy as np
 import pytest
 
 from skylinemapreducehadoop_spark.operators.reverse import reverse_skyline
+
+# the package re-exports the skyline() function under the module's name
+skyline_mod = importlib.import_module("skylinemapreducehadoop_spark.operators.skyline")
 
 
 def _oracle_ids(rows, q):
@@ -53,14 +58,37 @@ def test_reverse_skyline_query_on_a_point(spark, points):
     assert rows[3][0] in got and 900 in got  # both duplicates survive
 
 
-def test_reverse_skyline_blocked_path(spark, points):
+def test_reverse_skyline_blocked_path(spark, points, monkeypatch):
     rows, df = points
     q = (5.0, 5.0)
-    blocked = reverse_skyline(
-        df, ["x", "y"], q, broadcast_rows=2, cand_block_rows=16, data_block_rows=64
-    )
+    monkeypatch.setattr(skyline_mod, "_BROADCAST_ROWS", 2)
+    monkeypatch.setattr(skyline_mod, "_CAND_BLOCK_ROWS", 16)
+    monkeypatch.setattr(skyline_mod, "_DATA_BLOCK_ROWS", 64)
+    blocked = reverse_skyline(df, ["x", "y"], q)
+    plan = blocked._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInArrow" in plan  # the blocked path ran
     got = sorted(r["id"] for r in blocked.collect())
     assert got == _oracle_ids(rows, q)
+
+
+def test_reverse_skyline_date_dimension(spark):
+    """A DATE dim is compared in epoch days; the query point is given
+    in that space."""
+    import datetime
+
+    epoch = datetime.date(1970, 1, 1)
+    rng = np.random.RandomState(4)
+    days = rng.randint(19000, 19060, size=200)
+    ys = rng.randint(0, 30, size=200).astype(float)
+    rows = [(i, float(dd), float(y)) for i, (dd, y) in enumerate(zip(days, ys))]
+    df = spark.createDataFrame(
+        [(i, epoch + datetime.timedelta(days=int(dd)), float(y)) for i, dd, y in rows],
+        "id int, d date, y double",
+    ).repartition(5)
+    q = (19030.0, 15.0)
+    got = sorted(r["id"] for r in reverse_skyline(df, ["d", "y"], q).collect())
+    assert got == _oracle_ids(rows, q)
+    assert got
 
 
 def test_dynamic_skyline_matches_bruteforce_reference(spark):
